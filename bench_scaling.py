@@ -28,25 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _fingerprint(df):
-    """Order-insensitive content fingerprint: (sum of xxhash64 over the
-    stringified row with sorted columns, row count) — identical tables
-    at any parallelism level must produce identical values. SUM, not
-    bit_xor: xor cancels any row whose multiplicity changes by an even
-    amount (two paired duplicate rows fingerprint like their absence),
-    while a multiset sum always moves. The sum runs in decimal(38,0)
-    so ANSI mode can't overflow on int64 accumulation."""
-    from pyspark.sql import functions as F
-
-    cols = sorted(df.columns)
-    h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
-    return (
-        df.select(h.cast("decimal(38,0)").alias("_h"))
-        .agg(F.coalesce(F.sum("_h"), F.lit(0)).alias("s"), F.count("*").alias("n"))
-        .first()
-    )
-
-
 def _host_probe(concurrency: int) -> float:
     """Mean sec/task of the fixed pure-CPU workload at ``concurrency``
     simultaneous processes (barrier-started) — see bench_cpuprobe.py."""
@@ -61,6 +42,7 @@ def _host_probe(concurrency: int) -> float:
 
 
 def run_once(cores: int, pages_path: str, n_expected: int) -> tuple[float, int, tuple]:
+    from legal_knowledge_graph_spark.functions.ids import content_fingerprint
     from legal_knowledge_graph_spark.pipeline import run_pipeline
     from legal_knowledge_graph_spark.session import get_spark
 
@@ -74,12 +56,13 @@ def run_once(cores: int, pages_path: str, n_expected: int) -> tuple[float, int, 
         n_triples = out["triples"].count()
         out["edges"].count()
         dt = time.time() - t0
-        # content fingerprints (outside the timed window): sum+count of
-        # xxhash64 over sorted-column stringified rows, per table
+        # content fingerprints (outside the timed window): non-cancelling
+        # sum+count of xxhash64 over sorted-column rows, per table
         fps = []
         for name in ("triples", "nodes", "edges"):
-            r = _fingerprint(out[name])
-            fps.append((name, int(r["s"] or 0), int(r["n"])))
+            t = out[name]
+            r = t.agg(*content_fingerprint(*sorted(t.columns))).first()
+            fps.append((name, int(r["fingerprint"]), int(r["row_count"])))
         return dt, n_triples, tuple(fps)
     finally:
         shutil.rmtree(work, ignore_errors=True)

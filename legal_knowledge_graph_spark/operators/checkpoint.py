@@ -19,9 +19,9 @@ convention:
 - each commit appends **per-partition lineage rows**
   ``(stage, fingerprint, partition_id, row_count, committed_at)`` to
   ``<root>/_lineage`` — the north rule's per-partition lineage +
-  metrics. The fingerprint is content-derived (count + xxhash64 of
-  the rows' ids), so a resumed run can verify it is resuming onto the
-  same data.
+  metrics. The fingerprint is content-derived (a decimal(38,0) sum of
+  an all-column xxhash64, per partition, next to the row count), so a
+  resumed run can verify it is resuming onto the same data.
 
 Deterministic stage outputs + content-derived ids (functions/ids.py)
 make re-materialization idempotent, which is what makes this simple
@@ -36,6 +36,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from legal_knowledge_graph_spark.functions.ids import content_fingerprint
 
 LINEAGE_TABLE = "_lineage"
 
@@ -61,22 +63,14 @@ class StageCatalog:
     def _lineage_rows(self, stage: str, df: DataFrame) -> DataFrame:
         """Per-partition row counts + content fingerprint of the
         committed table (read back post-commit, grouped by the file
-        partition actually written)."""
-        # fingerprint over the FIRST column only (id-bearing by stage
-        # convention): a content check strong enough to catch resuming
-        # onto different data, ~10x cheaper than hashing every column
-        # (the lineage pass runs after every stage commit).
-        fp_col = df.columns[0]
+        partition actually written). The fingerprint covers every
+        column (functions/ids.content_fingerprint: a non-cancelling
+        decimal(38,0) sum)."""
+        fingerprint, row_count = content_fingerprint(*sorted(df.columns))
         return (
             df.withColumn("_pid", F.spark_partition_id())
             .groupBy("_pid")
-            .agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.coalesce(
-                    F.bit_xor(F.xxhash64(F.col(fp_col))),
-                    F.lit(0),
-                ).alias("fingerprint"),
-            )
+            .agg(row_count, fingerprint)
             .select(
                 F.lit(stage).alias("stage"),
                 F.col("_pid").alias("partition_id"),

@@ -112,7 +112,7 @@ def candidate_pairs(
         )
         metrics["dropped_buckets"] = int(dropped["nb"])
         metrics["dropped_rows"] = int(dropped["nr"])
-    # anti-join cap (same rationale as dedup._banded_pairs: the inner
+    # anti-join cap (same rationale as dedup.lsh_candidate_pairs: the inner
     # size join shuffled the banded table a second time; broadcast not
     # forced — the oversized set is data-dependent, AQE decides)
     oversized = sizes.where(F.col("bs") > max_block).select("band_key")

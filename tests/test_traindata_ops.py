@@ -84,30 +84,44 @@ def test_minhash_near_dup_finds_planted_pair(spark, docs):
         assert r["inter_size"] >= 0.7 * r["union_size"]
 
 
-def test_bitset_verify_caps_before_collect(spark, docs):
-    """The bitset verify must decline (return None) when the doc-count
-    or mask-byte-product bound is exceeded — BEFORE collecting anything
-    — and agree exactly with the shuffle-join verify under the cap."""
+def test_mask_broadcasts_decline_rules(spark, docs):
+    """The Arrow fast path's count-guard-then-collect declines (returns
+    None, so the operator falls back to the shuffle-join verify) above
+    the doc-count bound, one byte over the mask-byte budget, on
+    duplicate ids and on an empty table — and accepts at the exact
+    bounds with per-doc set sizes equal to the shingle table's."""
     from legal_knowledge_graph_spark.operators.dedup import (
-        jaccard_verify,
-        jaccard_verify_bitset,
+        _collect_code_vocab,
+        _doc_gram_stats_from_codes,
+        _mask_broadcasts,
+        _norm_docs,
+        _packed_grams_table,
         shingles,
     )
 
     d = docs.select("doc_id", "text").where("doc_id < 20")
-    sh = shingles(d, "doc_id", "text")
-    pairs = spark.createDataFrame([(0, 1), (2, 3)], "doc_a long, doc_b long")
-    assert jaccard_verify_bitset(sh, pairs, max_mask_bytes=16) is None
-    assert jaccard_verify_bitset(sh, pairs, max_docs=5) is None
-    bs = {
-        (r["doc_a"], r["doc_b"]): (r["inter_size"], r["union_size"])
-        for r in jaccard_verify_bitset(sh, pairs).collect()
+    grams = _packed_grams_table(_norm_docs(d, "doc_id", "text"), 3)
+    vocab = _collect_code_vocab(grams, 1 << 16)
+    stats = _doc_gram_stats_from_codes(grams, vocab, 3, 0).localCheckpoint()
+    nbytes = (len(vocab) + 7) // 8
+    n = stats.count()
+    assert n == 20
+    big = 1 << 28
+    assert _mask_broadcasts(stats, nbytes, n - 1, big) is None
+    assert _mask_broadcasts(stats, nbytes, n, n * nbytes - 1) is None
+    br = _mask_broadcasts(stats, nbytes, n, n * nbytes)
+    assert br is not None
+    b_map, _, b_sz, int_ids = br
+    assert int_ids
+    s_ids, rows = b_map.value
+    want = {
+        r["doc_id"]: r["count"]
+        for r in shingles(d, "doc_id", "text").groupBy("doc_id").count().collect()
     }
-    sj = {
-        (r["doc_a"], r["doc_b"]): (r["inter_size"], r["union_size"])
-        for r in jaccard_verify(sh, pairs).collect()
-    }
-    assert bs == sj and len(bs) == 2
+    assert {int(i): int(b_sz.value[r]) for i, r in zip(s_ids, rows)} == want
+    dup = stats.unionByName(stats.where("doc_id = 0"))
+    assert _mask_broadcasts(dup, nbytes, big, big) is None
+    assert _mask_broadcasts(stats.limit(0), nbytes, big, big) is None
 
 
 def test_embedding_near_dup_cap_is_dim_aware(spark, embs):
@@ -665,33 +679,49 @@ def test_packed_gram_parity_with_gram_set():
 def test_jaccard_fast_path_equals_distributed(spark, docs, monkeypatch):
     """The bounded-vocab Arrow fast paths (packed grams, broadcast
     masks, block-local pair enumeration incl. the GEMM branch for big
-    blocks) must match the distributed shingle-join path row for row."""
+    blocks) must match the distributed shingle-join path row for row —
+    on unique ids, and on the duplicate-id and empty corpora the fast
+    path declines."""
     from legal_knowledge_graph_spark.operators import dedup
 
     d = docs.where("doc_id < 300").select(
         "doc_id", "text", F.lit("blk").alias("one_block")
     )
+    corpora = {
+        # one 300-doc block => first i-chunks enumerate >= 2^14 pairs, so
+        # the GEMM branch runs for them and the pairwise branch for the tail
+        "unique": d,
+        "dup_ids": d.where("doc_id < 40").unionByName(d.where("doc_id < 10")),
+        "empty": d.where("doc_id < 0"),
+    }
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    # one 300-doc block => first i-chunks enumerate >= 2^14 pairs, so
-    # the GEMM branch runs for them and the pairwise branch for the tail
-    fast = rows(
-        dedup.ngram_jaccard_pairs(d, "doc_id", "text", "one_block", min_jaccard=0.5)
-    )
-    monkeypatch.setattr(dedup, "_ngram_fast", lambda *a, **kw: None)
-    dist = rows(
-        dedup.ngram_jaccard_pairs(d, "doc_id", "text", "one_block", min_jaccard=0.5)
-    )
-    monkeypatch.undo()
-    assert fast == dist and len(fast) > 0
+    def both(fast_fn, call):
+        fast = rows(call())
+        monkeypatch.setattr(dedup, fast_fn, lambda *a, **kw: None)
+        dist = rows(call())
+        monkeypatch.undo()
+        return fast, dist
 
-    fastm = rows(dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.7))
-    monkeypatch.setattr(dedup, "_minhash_fast", lambda *a, **kw: None)
-    distm = rows(dedup.minhash_near_duplicates(d, "doc_id", "text", threshold=0.7))
-    monkeypatch.undo()
-    assert fastm == distm
+    for name, c in corpora.items():
+        fast, dist = both(
+            "_ngram_fast",
+            lambda: dedup.ngram_jaccard_pairs(
+                c, "doc_id", "text", "one_block", min_jaccard=0.5
+            ),
+        )
+        assert fast == dist, name
+        assert (len(fast) > 0) == (name != "empty"), name
+
+        fastm, distm = both(
+            "_minhash_fast",
+            lambda: dedup.minhash_near_duplicates(c, "doc_id", "text", threshold=0.7),
+        )
+        assert fastm == distm, name
+        if name == "empty":
+            assert fastm == []
 
 
 def test_simhash_near_dup_bucket_local_equals_bruteforce(spark, docs):
